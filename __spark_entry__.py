@@ -4114,26 +4114,17 @@ def orders_woe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lineitem_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5%-trimmed mean price per return flag
     (mlstats.trimmed_mean_by): fixed-point cents, exact tail drop by
-    per-group rank. r12: rank_impl picked from the DRIVER-KNOWN input
-    size — the 3-value group key serializes the window impl's per-group
-    sort into 3 tasks (9.8 s at sf1, paired A/B: range 4.0-5.2 s calm),
-    but the grouped range-partition rank pays ~4 extra small jobs that
-    LOSE at floor-dominated sizes (sf0.1 paired A/B: window won all
-    three rounds). Same result either way (tie order is kept-sum
-    invariant; oracle green on both)."""
-    import os as _os
-
+    per-group rank. trimmed_mean_by picks the rank from the scan's
+    estimated size — the 3-value group key serializes the window's
+    per-group sort into 3 tasks (9.8 s at sf1, paired A/B: range
+    4.0-5.2 s calm), but the grouped range-partition rank pays extra
+    small jobs that LOSE at floor-dominated sizes (sf0.1 paired A/B:
+    window won all three rounds). Same result either way (tie order is
+    kept-sum invariant; oracle green on both)."""
     from docetl_spark.functions.mlstats import trimmed_mean_by
 
-    _p = f"{sf_dir}/lineitem.parquet"
-    _bytes = (
-        _os.path.getsize(_p) if _os.path.isfile(_p)
-        else sum(_os.path.getsize(_os.path.join(r, f))
-                 for r, _, fs in _os.walk(_p) for f in fs))
-    impl = "range" if _bytes > (32 << 20) else "window"
     return trimmed_mean_by(_t(spark, sf_dir, "lineitem"),
-                           "l_extendedprice", by=["l_returnflag"], trim_bp=500,
-                           rank_impl=impl)
+                           "l_extendedprice", by=["l_returnflag"], trim_bp=500)
 
 
 def events_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4267,22 +4258,21 @@ def events_value_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain: percent_rank and cume_dist in integer bp via the
     distributed range-partitioned prefix sum over the distinct-value
     table (the posture a bare PERCENT_RANK() window would violate)."""
-    from docetl_spark.functions.stats import _global_cumsum
+    from docetl_spark.functions.stats import carry_caches, prefix_scan
 
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     dv = ev.groupBy(
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("value_cents")
     ).agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_c"))
-    cum, totals = _global_cumsum(
-        dv, F.col("value_cents").asc(), ["_c"], with_totals=True)
-    n = int(totals["_c"])
-    return cum.select(
+    cum, totals = prefix_scan(dv, F.col("value_cents").asc(), sums=["_c"])
+    n = totals["_c"]
+    return carry_caches(cum.select(
         "value_cents",
         F.col("_c").cast("long").alias("n"),
         F.expr(f"CAST((_c_cum - _c) * 10000 DIV {max(n - 1, 1)} AS BIGINT)")
         .alias("pct_rank_bp"),
         F.expr(f"CAST(_c_cum * 10000 DIV {n} AS BIGINT)").alias("cume_bp"),
-    )
+    ), cum)
 
 
 def part_topk_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4946,7 +4936,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # one anchor per operator family — round 10 rotated two slots
     # (events_sessionize -> events_stream_cusum, ann_brute_force ->
     # events_weighted_quantiles) toward the most regression-prone
-    # families: streaming batch/stream twins and the `_global_cumsum`
+    # families: streaming batch/stream twins and the `prefix_scan`
     # distributed-prefix-sum consumers (VERDICT r9 ask #8). The rotated-
     # out keys stay in the cumulative ledger, so they remain verified.
     anchors = [

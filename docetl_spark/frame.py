@@ -13,6 +13,7 @@ Laziness falls out of Spark: nothing executes until an action
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -93,9 +94,16 @@ class SemanticFrame:
     # cached relations for the whole session (Spark's CacheManager never
     # evicts without unpersist/clearCache). The frame now carries them
     # here and ``collect()`` releases them after its memoizing
-    # materialization (see collect's docstring for the recompute
-    # trade-off); ``release_caches()`` is the explicit path.
+    # materialization (see release_caches for who still holds them).
     _caches: tuple = field(default_factory=tuple, compare=False, repr=False)
+
+    def __post_init__(self):
+        # every live frame carrying a handle holds it: release_caches
+        # unpersists a handle only once no other live frame can still
+        # plan over it
+        for c in self._caches:
+            c.__dict__.setdefault(
+                "_docetl_holders", weakref.WeakValueDictionary())[id(self)] = self
 
     # ------------------------------------------------------------ factory
     @classmethod
@@ -2072,7 +2080,8 @@ class SemanticFrame:
         o = Observation(f"op{max(0, len(self.op_log) - 1)}:input")
         df = self.df.observe(o, F.count(F.lit(1)).alias("rows"))
         return SemanticFrame(df, self.backend, self.op_log,
-                             _observe=True, _obs=(("input", o),))
+                             _observe=True, _obs=(("input", o),),
+                             _caches=self._caches)
 
     def profile_stats(self, *, materialize: bool = True) -> list[dict]:
         """Observed per-op rows + selectivity after (or via) one action.
@@ -2133,27 +2142,49 @@ class SemanticFrame:
         of nested lists/dicts — can't corrupt the memo.
 
         ``release_caches`` (default True, r12): after the memoizing
-        materialization, unpersist the intermediates this frame's ops
-        pinned (``_caches``) — in a long-lived session they otherwise
-        accumulate until clearCache. Trade-off: a frame DERIVED from
-        this one after the release recomputes that lineage uncached
-        (derive first, collect last — or pass ``release_caches=False``
-        and call :meth:`release_caches` yourself)."""
-        if "rows" not in self._memo:
-            self._memo["rows"] = [r.asDict(recursive=True) for r in self.df.collect()]
+        materialization, :meth:`release_caches` — in a long-lived session
+        the intermediates this frame's ops pinned otherwise accumulate
+        until clearCache."""
         if release_caches:
             self.release_caches()
         import copy
 
-        return copy.deepcopy(self._memo["rows"])
+        return copy.deepcopy([r.asDict(recursive=True) for r in self._rows()])
+
+    def _rows(self) -> list:
+        if "rows" not in self._memo:
+            self._memo["rows"] = self.df.collect()
+        return self._memo["rows"]
 
     def release_caches(self) -> int:
-        """Unpersist every intermediate this frame's ops pinned; returns
-        the number released. Idempotent (a released handle is skipped on
-        the next call); safe at any time — caches are a performance
-        artifact, never a correctness one."""
+        """Unpersist the intermediates this frame's ops pinned
+        (``_caches``); returns the number released. Idempotent.
+
+        The frame first materializes (memoized, as :meth:`collect`) and
+        from then on reads its collected rows, so its own actions
+        (show, to_pandas, write_*) and frames derived from it later never
+        re-plan the released lineage — which matters beyond speed: a
+        global ``prefix_scan``'s offsets describe the partitions of its
+        cached sorted frame, and a plan that recomputes that frame
+        raises. A handle that another live frame still holds (one
+        derived from this frame before the call, or an earlier frame of
+        the chain kept in a variable) stays pinned until that frame
+        releases it too, or until clearCache."""
+        if not self._caches:
+            return 0
+        rows = self._rows()
+        # the frame is immutable in content: only its source changes, to
+        # the rows it already produced
+        object.__setattr__(self, "df", self.df.sparkSession.createDataFrame(
+            rows, self.df.schema))
+        caches = self._caches
+        object.__setattr__(self, "_caches", ())
         n = 0
-        for c in self._caches:
+        for c in caches:
+            holders = c.__dict__.get("_docetl_holders", {})
+            holders.pop(id(self), None)
+            if holders:
+                continue
             try:
                 if c.storageLevel.useMemory or c.storageLevel.useDisk:
                     c.unpersist()

@@ -24,10 +24,11 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from .stats import (
     _checked_binary_label,
-    _global_cumsum,
     bounded_global_window,
     broadcast_scalar_join,
+    carry_caches,
     chi_square_bp,
+    prefix_scan,
     to_cents,
 )
 
@@ -41,7 +42,7 @@ def _midrank2(df: DataFrame, value_col: str, out_col: str,
     Grouped: rank() + a tie-count window riding the (by) shuffle.
     GLOBAL: collapse to distinct values (one map-side-combinable
     count), distributed prefix sum over the value order
-    (_global_cumsum — never a bare global window), then a join back on
+    (prefix_scan — never a bare global window), then a join back on
     the value; 2·midrank of a tie group ending at cumulative count m
     with c members is 2m − c + 1."""
     if by:
@@ -51,13 +52,14 @@ def _midrank2(df: DataFrame, value_col: str, out_col: str,
     dv = df.groupBy(F.col(value_col).alias("_mr_v")).agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("_mr_c")
     )
-    cum = _global_cumsum(dv, F.col("_mr_v").asc(), ["_mr_c"])
+    cum, _ = prefix_scan(dv, F.col("_mr_v").asc(), sums=["_mr_c"])
     mr = cum.select(
         F.col("_mr_v"),
         (F.lit(2) * F.col("_mr_c_cum") - F.col("_mr_c") + F.lit(1))
         .cast("long").alias(out_col),
     )
-    return df.join(mr, df[value_col] == mr["_mr_v"]).drop("_mr_v")
+    return carry_caches(
+        df.join(mr, df[value_col] == mr["_mr_v"]).drop("_mr_v"), df, cum)
 
 
 def spearman_by(
@@ -103,7 +105,7 @@ def spearman_by(
         raise ValueError(f"spearman_by reserves column names {clash}")
     base = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
     if not by:
-        # GLOBAL path (r11 optimization, guide §5): each _global_cumsum
+        # GLOBAL path (r11 optimization, guide §5): each prefix_scan
         # runs an offset-collect ACTION over its distinct-value table,
         # so the two midrank passes plus the final sums re-derived
         # ``base``'s lineage three times from the raw scan. Persist it
@@ -151,7 +153,7 @@ def spearman_by(
     )
     if not by:
         out._docetl_cached_input = base  # release: .unpersist() when done
-    return out
+    return carry_caches(out, out, ranked)
 
 
 def cramers_v2(
@@ -448,6 +450,25 @@ def woe_table(
     return out
 
 
+# trimmed_mean_by ranks inputs estimated above this many bytes with the
+# grouped prefix_scan instead of one window task per group
+_RANGE_RANK_MIN_BYTES = 32 << 20
+
+
+def _input_bytes(df: DataFrame) -> int:
+    """Summed size estimates of ``df``'s leaf relations — the file
+    bytes for a scan, whatever filters or joins sit above it (a join's
+    own estimate is the product of its inputs'). 0 when a leaf has no
+    size statistics: a Python-list or RDD input estimates
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default)."""
+    unknown = df.sparkSession._jsparkSession.sessionState().conf() \
+        .defaultSizeInBytes()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = [int(leaves.apply(i).stats().sizeInBytes())
+             for i in range(leaves.size())]
+    return 0 if any(b >= unknown for b in sizes) else sum(sizes)
+
+
 def trimmed_mean_by(
     df: DataFrame,
     value_col: str,
@@ -455,7 +476,6 @@ def trimmed_mean_by(
     by: list[str],
     trim_bp: int = 1000,
     scale: int = 100,
-    rank_impl: str = "window",
 ) -> DataFrame:
     """Per-group trimmed mean, EXACT in fixed-point cents: drop the
     lowest and highest floor(n·trim_bp/10⁴) rows of each group by
@@ -472,18 +492,20 @@ def trimmed_mean_by(
     Output: ``by`` + ``n`` + ``n_trimmed_each`` + ``n_kept`` +
     ``sum_kept_cents`` + ``trimmed_mean_cents``.
 
-    Plan: ``rank_impl="window"`` (default) — one (by)-shuffle carries
-    the rank window and the count; the per-group sort is the family's
-    documented exact-order bound, right for MANY balanced groups but a
-    single giant or low-cardinality group serialises into one task.
-    ``rank_impl="range"`` (r12, guide §2.5) — the grouped
-    range-partition rank (stats._grouped_row_number): each group's sort
-    distributes across the session's partitions, at the cost of one
-    extra exchange — right when ``by`` is low-cardinality or hub-skewed
-    (lineitem_trimmed_mean's 3-value key sorted 3 x 2M rows on 3 cores:
-    9.8 s at sf1 -> 2.6 s). Both produce the identical result: ranks
-    differ only in tie order WITHIN equal (by, value), which the
-    kept-sum is invariant to by the multiset argument above. Requires
+    Plan, picked by the input's estimated size (its leaf relations'
+    ``sizeInBytes``, the file bytes for a scan; an input without size
+    statistics counts as small): up to
+    ``_RANGE_RANK_MIN_BYTES``, one (by)-shuffle carries the rank window
+    and the count — the per-group sort is the family's exact-order
+    bound, right for small inputs, where a range scan's extra small jobs
+    lose to the per-job floor. Above it, the grouped ``prefix_scan``
+    (guide §2.5): each group's sort distributes across the session's
+    partitions, so a low-cardinality or hub-skewed ``by`` no longer
+    serialises into one task (lineitem_trimmed_mean's 3-value key
+    sorted 3 x 2M rows on 3 cores: 9.8 s at sf1 -> 2.6 s). Both produce
+    the identical result: ranks differ only in tie order WITHIN equal
+    (by, value), which the kept-sum is invariant to by the multiset
+    argument above. Requires
     ``by`` — a global trimmed mean over a row-cardinality table needs
     the distributed-rank machinery; compose quantile_buckets + filter
     for that.
@@ -495,8 +517,6 @@ def trimmed_mean_by(
         )
     if not (0 <= int(trim_bp) < 5000):
         raise ValueError("trim_bp must be in [0, 5000)")
-    if rank_impl not in ("window", "range"):
-        raise ValueError(f"trimmed_mean_by: unknown rank_impl {rank_impl!r}")
     reserved = {"n", "n_trimmed_each", "n_kept", "sum_kept_cents",
                 "trimmed_mean_cents", "_tm_c", "_tm_r", "_tm_n"}
     clash = sorted(reserved & set(by))
@@ -505,12 +525,10 @@ def trimmed_mean_by(
     base = df.filter(F.col(value_col).isNotNull()).select(
         *by, to_cents(value_col, scale).cast("decimal(38,0)").alias("_tm_c")
     )
-    handle = None
-    if rank_impl == "range":
-        from .stats import _grouped_row_number
-
-        ranked, handle = _grouped_row_number(base, list(by), "_tm_c",
-                                             "_tm_r", "_tm_n")
+    if _input_bytes(df) > _RANGE_RANK_MIN_BYTES:
+        ranked, _ = prefix_scan(base, "_tm_c", by=by, rank_col="_tm_r")
+        ranked = carry_caches(
+            ranked.withColumnRenamed("_tm_r_total", "_tm_n"), ranked)
     else:
         w = W.partitionBy(*by).orderBy(F.col("_tm_c").asc())
         ranked = base.withColumn("_tm_r", F.row_number().over(w)).withColumn(
@@ -525,9 +543,7 @@ def trimmed_mean_by(
         F.sum("_tm_c").cast("long").alias("sum_kept_cents"),
         F.expr("CAST(sum(_tm_c) DIV count(1) AS BIGINT)").alias("trimmed_mean_cents"),
     )
-    if handle is not None:
-        out._docetl_cached_input = handle  # release: .unpersist() when done
-    return out
+    return carry_caches(out, ranked)
 
 
 def _merge_count_inversions(seq) -> int:
@@ -1352,13 +1368,13 @@ def kruskal_wallis_by(
                 .rowsBetween(W.unboundedPreceding, W.currentRow))
         mr = dv.withColumn("_mr_c_cum", F.sum("_mr_c").over(wcum))
     else:
-        mr = _global_cumsum(dv, F.col("_kw_v").asc(), ["_mr_c"])
+        mr, _ = prefix_scan(dv, F.col("_kw_v").asc(), sums=["_mr_c"])
     # 2·midrank of the tie group ending at cumulative count m with c
     # members is 2m − c + 1 — an exact integer on the value grain
-    mr = mr.select(
+    mr = carry_caches(mr.select(
         *bys, "_kw_v", "_mr_c",
         (F.lit(2) * F.col("_mr_c_cum") - F.col("_mr_c") + F.lit(1))
-        .cast("decimal(38,0)").alias("_kw_r"))
+        .cast("decimal(38,0)").alias("_kw_r")), mr)
     # per-(by, group): rank sum and count from the counts grain —
     # S_g = Σ_v c_gv · mr2_v, the same integers row-ranking produced
     per_g = gv.join(mr.select(*bys, "_kw_v", "_kw_r"),
@@ -1394,7 +1410,7 @@ def kruskal_wallis_by(
     )
     # tie mass from the midrank table — it already carries the
     # per-value count (and the global path holds it persisted inside
-    # _global_cumsum), so ties cost one small-table aggregation, never
+    # prefix_scan), so ties cost one small-table aggregation, never
     # another pass over gv
     ties = mr.select(*bys, F.col("_mr_c").alias("_t")).groupBy(*bys).agg(
         F.sum(F.expr("_t * _t * _t - _t")).alias("_tt"))
@@ -1439,7 +1455,7 @@ def kruskal_wallis_by(
             )).alias("h_tie_bp"),
     )
     out._docetl_cached_input = gv  # release: .unpersist() when done
-    return out
+    return carry_caches(out, out, mr)
 
 
 def mutual_info_by(

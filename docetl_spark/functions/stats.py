@@ -10,7 +10,7 @@ because nothing ever leaves the executors except the top-N rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 
 def broadcast_scalar_join(
@@ -52,8 +52,8 @@ def bounded_global_window(anchor_col, *order):
     single-partition scale bugs (it exposed the r9 auc/ks global-cumsum
     one); routing the benign-by-contract frames through this helper
     keeps the signal hard (r9 VERDICT ask #4). NEVER use this on a
-    row-cardinality frame — that's _global_cumsum / _global_row_number
-    territory; tests/test_no_bare_global_windows.py lints the package
+    row-cardinality frame — that's prefix_scan territory;
+    tests/test_no_bare_global_windows.py lints the package
     so every global window is one or the other, explicitly.
 
     ``anchor_col`` is any always-present column of the frame (the hash
@@ -160,9 +160,9 @@ def exact_quantiles(
     groups); a single giant group wants ``approx_percentile`` instead.
     WITHOUT ``by``, a bare ``W.partitionBy()`` window would drag the
     whole table into ONE partition, so the global path rides the
-    distributed range-partitioned rank from rank.py instead (boundary
-    sampling + per-partition offsets; runs two small jobs, so it is not
-    plan-only).
+    distributed range-partitioned rank of ``prefix_scan`` instead
+    (boundary sampling + per-partition offsets; runs two small jobs, so
+    it is not plan-only).
     """
     if not ps or any(not (0.0 <= p <= 1.0) for p in ps):
         raise ValueError("ps must be fractions in [0, 1]")
@@ -183,21 +183,18 @@ def exact_quantiles(
             F.count(v).over(wall).alias("_n"),
         )
     else:
-        from ..operators.rank import _global_row_number_with_total
-
         base = df.filter(v.isNotNull()).select(v.alias("_v"))
         # r11 optimization (guide §2.4): the total row count used to be
         # a separate count aggregation over the ranked frame attached
         # via broadcast_scalar_join — referencing the WHOLE rank subtree
         # (including any expensive upstream like sessionization) twice.
-        # _global_cumsum's offset map already gives the driver the exact
-        # total before any action, so it inlines as a literal — same
-        # figure, half the plan.
-        g, n_total = _global_row_number_with_total(
-            base, [F.col("_v").asc()], "_r1")
-        ranked = g.select(
+        # prefix_scan's driver totals already hold the exact count
+        # before any action, so it inlines as a literal — same figure,
+        # half the plan.
+        g, tots = prefix_scan(base, [F.col("_v").asc()], rank_col="_r1")
+        ranked = carry_caches(g.select(
             "_v", (F.col("_r1") - F.lit(1)).alias("_r"),
-            F.lit(int(n_total)).cast("long").alias("_n"))
+            F.lit(tots["_r1"]).cast("long").alias("_n")), g)
     aggs = [F.coalesce(F.max("_n"), F.lit(0)).alias("n")]
     names = []
     for p in ps:
@@ -217,7 +214,7 @@ def exact_quantiles(
             (F.lit(1.0) - F.col(f"_f_{tag}")) * F.col(f"_lo_{tag}")
             + F.col(f"_f_{tag}") * F.col(f"_hi_{tag}"),
         ).drop(f"_lo_{tag}", f"_hi_{tag}", f"_f_{tag}")
-    return out
+    return carry_caches(out, ranked)
 
 
 def approx_quantiles(
@@ -600,7 +597,7 @@ def quantile_buckets(
     With ``by``: Spark's ntile window per group (one sorted task per
     group, the exact-order bound). WITHOUT ``by``, a bare global window
     would drag the table into ONE partition — the global path instead
-    rides the distributed range-partitioned rank (rank.py) and computes
+    rides the distributed range-partitioned rank (prefix_scan) and computes
     the EXACT NTILE assignment from the rank in closed form: with
     q = total DIV n and rem = total % n, the first rem buckets take
     q+1 rows and the rest take q. (The tempting one-liner
@@ -617,18 +614,16 @@ def quantile_buckets(
     if by:
         w = W.partitionBy(*[F.col(c) for c in by]).orderBy(*order)
         return df.withColumn(bucket_col, F.ntile(n).over(w).cast("long"))
-    from ..operators.rank import _global_row_number_with_total
-
-    # The rank machinery's driver offset map already knows the grand
-    # total, so the bucket cut is a LITERAL — the former count-agg +
+    # prefix_scan's driver totals already know the row count, so the
+    # bucket cut is a LITERAL — the former count-agg +
     # broadcast_scalar_join attached the same number at runtime while
     # duplicating the entire rank subtree in the plan (nested callers
     # like rfm_segments compounded that doubling exponentially: 968
     # Exchange nodes in customer_rfm's r11 before-plan).
-    g, total = _global_row_number_with_total(df, order, "_qr")
-    return g.withColumn(
-        bucket_col, _ntile_from_rank("_qr", str(int(total)), int(n))
-    ).drop("_qr")
+    g, tots = prefix_scan(df, order, rank_col="_qr")
+    return carry_caches(g.withColumn(
+        bucket_col, _ntile_from_rank("_qr", str(tots["_qr"]), int(n))
+    ).drop("_qr"), g)
 
 
 def _ntile_from_rank(rank_col: str, total_col: str, k: int):
@@ -899,9 +894,11 @@ def weighted_quantiles(
         # the distributed range-partitioned prefix sum instead; the
         # grand total comes back from its driver loop as an exact int,
         # attached as a literal (no extra agg job, no join)
-        cum, tots = _global_cumsum(collapsed, "value", ["_wq_w"], with_totals=True)
-        cum = cum.withColumnRenamed("_wq_w_cum", "_wq_cum").withColumn(
-            "_wq_tot", F.lit(str(tots["_wq_w"])).cast("decimal(38,0)"))
+        scanned, tots = prefix_scan(collapsed, "value", sums=["_wq_w"])
+        cum = carry_caches(
+            scanned.withColumnRenamed("_wq_w_cum", "_wq_cum").withColumn(
+                "_wq_tot", F.lit(str(tots["_wq_w"])).cast("decimal(38,0)")),
+            scanned)
     qlit = F.explode(F.array(*[F.lit(int(q)) for q in sorted(set(int(q) for q in qs_bp))]))
     hit = (
         cum.select(*part, "value", "_wq_cum", "_wq_tot", qlit.alias("q_bp"))
@@ -913,10 +910,9 @@ def weighted_quantiles(
             & (F.col("_wq_cum") * 10000 >= F.col("q_bp").cast("decimal(38,0)") * F.col("_wq_tot"))
         )
     )
-    return (
-        hit.groupBy(*(by or []), "q_bp")
-        .agg(F.min("value").alias("value"))
-    )
+    return carry_caches(
+        hit.groupBy(*(by or []), "q_bp").agg(F.min("value").alias("value")),
+        cum)
 
 
 def trend_fit(
@@ -1241,12 +1237,12 @@ def rfm_segments(
     for col, score in (("recency_ts", "r_score"), ("frequency", "f_score"),
                        ("monetary_cents", "m_score")):
         out = quantile_buckets(out, col, n_tiles, bucket_col=score, tiebreak=keys)
-    return out.withColumn(
+    return carry_caches(out.withColumn(
         "segment",
         F.concat(F.lit("R"), F.col("r_score").cast("string"),
                  F.lit("F"), F.col("f_score").cast("string"),
                  F.lit("M"), F.col("m_score").cast("string")),
-    )
+    ), out)
 
 
 def gini_bp(
@@ -1679,162 +1675,164 @@ def target_encode_loo(
     return j.withColumn(out_col, enc).drop("_te_c", "_te_s", "_te_n", "_te_x")
 
 
-def _global_cumsum(df: DataFrame, order_col, sum_cols: list[str],
-                   *, with_totals: bool = False):
-    """Distributed global cumulative sums over a total order on
-    ``order_col`` (one Column/name or a list — compound keys order
-    lexicographically) — the prefix-sum twin of rank.py's
-    _global_row_number. A bare ``W.orderBy(...)`` without a partition
-    key moves every row into ONE partition (fine on a
-    distinct-collapsed table at test scale, fatal when the key is a
-    continuous double whose distinct count tracks row count). Instead:
-    range-repartition on the key, per-partition running sums, plus a
-    tiny driver-side per-partition offset map per column (offsets
-    carried as exact Python ints -> decimal literals, so nothing
-    overflows at any scale decimal(38,0) itself supports).
+def carry_caches(out: DataFrame, *srcs: DataFrame) -> DataFrame:
+    """Attach to ``out`` the persist release handles
+    (``_docetl_cached_input``) of every frame in ``srcs``, flattened
+    into one list, and return it — the hand-off for a function whose
+    result is built on cached intermediates (a derived DataFrame loses
+    the plain attribute). SemanticFrame harvests the list and
+    ``collect()`` unpersists it."""
+    hs: list = []
+    for s in srcs:
+        h = getattr(s, "_docetl_cached_input", None)
+        if h is not None:
+            hs += list(h) if isinstance(h, (list, tuple)) else [h]
+    if hs:
+        out._docetl_cached_input = hs
+    return out
 
-    The running sum uses an explicit ROWS frame, not the window
-    default: the default RANGE frame includes ALL PEERS of the current
-    order value, so tied rows would share one cumulative value — which
-    breaks the lit-1 row-number case (rank.py's _global_row_number
-    delegates here and needs DISTINCT ranks under ties, exactly what
-    ROW_NUMBER gave; exact_quantiles' rank-equality probe finds no row
-    otherwise). Under ties the per-tie order is arbitrary-but-valid,
-    matching ROW_NUMBER's contract.
 
-    PRECONDITION for the by-VALUE cumulative reading: the order key is
-    unique per row (callers pass a groupBy-collapsed table, or append a
-    tiebreak column) — range partitioning may split ties across
-    partition boundaries, and with the ROWS frame a tied row's prefix
-    covers an arbitrary subset of its peers. Appends ``<col>_cum`` for
-    each requested column. With ``with_totals=True`` returns
-    ``(df, {col: grand_total})`` — the driver loop already holds the
-    exact totals, so callers can attach them as literals instead of
-    paying another aggregation job plus a broadcast join.
+def prefix_scan(df: DataFrame, order, *, by=(), sums=(), rank_col=None):
+    """Distributed prefix scan over a total order: a 1-based row number
+    (``rank_col``) and running sums (``<c>_cum`` for each of ``sums``),
+    per ``by`` group or over the whole frame when ``by`` is empty —
+    the single home for every global/per-group position the engine
+    needs (rank, resolve blocking/sampling, equijoin quotas, exact
+    NTILE/quantile/ECDF). ``order`` is one Column/name or a list
+    (compound keys order lexicographically).
 
-    The repartitioned-and-sorted table stays CACHED for the session
-    (the rank.py posture): the cache is load-bearing, not a leftover —
-    it pins the sampled range boundaries so the offset map (computed in
-    job 1) describes exactly the partitions the final windowed job
-    reads; an eager unpersist would let job 2 re-sample boundaries from
-    recomputed lineage. Cached blocks sit in evictable storage memory,
-    so long sessions degrade to recompute under pressure, never OOM.
+    A bare ``W.orderBy(...)`` moves every row into ONE partition, and
+    ``W.partitionBy(by).orderBy(...)`` one task per group (a hub or
+    low-cardinality key serialises). Instead: range-repartition on
+    ``by + order`` — each group occupies a contiguous partition run —
+    sort within partitions, tag ``_pid``, number/sum within each
+    (partition, group), and add the counts/sums of the earlier
+    partitions as offsets.
+
+    Returns ``(frame, totals)``:
+
+    - ``by`` empty: the per-partition totals are one driver collect of
+      at most one row per partition; offsets ride the plan as LITERAL
+      maps (decimal(38,0) for sums, so nothing overflows), and
+      ``totals`` is the exact grand total as a Python int — keyed by
+      each sum column, and by ``rank_col`` for the row count. Callers
+      attach it as a literal instead of an extra aggregation +
+      broadcast join (that doubling gave customer_rfm 968 Exchange
+      nodes before r11).
+    - ``by`` given: no driver collect — the offsets come from a window
+      over the small per-(``_pid``, group) count table (partitioned by
+      ``by``, ordered by ``_pid``), attached by a null-safe join;
+      ``totals`` is None and each row carries its group's totals as
+      ``<rank_col>_total`` / ``<c>_total``.
+
+    Running values use an explicit ROWS frame: tied rows get DISTINCT
+    ranks in an arbitrary-but-valid order (ROW_NUMBER's contract), so a
+    by-VALUE cumulative reading needs a unique order key (collapse to
+    distinct values, or append a tiebreak) — range partitioning may
+    split peers across partitions.
+
+    The repartitioned-and-sorted frame is CACHED, and the cache is
+    load-bearing: it pins the sampled range boundaries, so the offsets
+    describe exactly the partitions the final job reads. A plan built
+    after the cache is released re-samples them; the global path then
+    raises rather than misnumber rows. The release handle rides the
+    result as ``_docetl_cached_input`` (after any handles ``df``
+    carried); pass it on with :func:`carry_caches`.
     """
-    clash = sorted(({"_pid"} | {f"{c}_cum" for c in sum_cols}) & set(df.columns))
+    by, sums = list(by), list(sums)
+    # "_n" is the row count (a rank is the running count), so it may not
+    # name a sum or group column
+    cols = (["_n"] if rank_col else []) + sums
+    label = {"_n": rank_col, **{c: c for c in sums}}
+    named = {"_n": rank_col, **{c: f"{c}_cum" for c in sums}}
+    made = [named[c] for c in cols] + [f"{label[c]}_total" for c in cols if by]
+    clash = sorted(({"_pid"} | set(made)) & set(df.columns)
+                   | {"_n"} & set(by + sums))
     if clash:
         raise ValueError(
-            f"_global_cumsum reserves column names {clash} — rename the inputs"
+            f"prefix_scan reserves column names {clash} — rename the inputs"
         )
     order = [
         (F.col(c).asc() if isinstance(c, str) else c)
-        for c in (order_col if isinstance(order_col, (list, tuple)) else [order_col])
+        for c in (order if isinstance(order, (list, tuple)) else [order])
     ]
+    key = [F.col(c).asc() for c in by] + order
     parts = df.sparkSession.sparkContext.defaultParallelism or 8
-    src = df.persist()
+    # the global path reads the input twice while building (boundary
+    # sample, then the shuffle its collect runs); the grouped path runs
+    # nothing until the caller's action
+    src = df if by else df.persist()
     s = (
-        src.repartitionByRange(parts, *order)
-        .sortWithinPartitions(*order)
+        src.repartitionByRange(parts, *key)
+        .sortWithinPartitions(*key)
         .withColumn("_pid", F.spark_partition_id())
         .cache()
     )
-    rows = s.groupBy("_pid").agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    ).collect()
-    src.unpersist()
-    offs: dict[str, dict[int, int]] = {c: {} for c in sum_cols}
-    acc = {c: 0 for c in sum_cols}
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        for c in sum_cols:
-            offs[c][r["_pid"]] = acc[c]
-            acc[c] += int(r[c] or 0)
     w = (
-        W.partitionBy("_pid").orderBy(*order)
+        W.partitionBy("_pid", *by).orderBy(*order)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    out = s
-    for c in sum_cols:
-        if offs[c]:
-            omap = F.create_map(*[
-                F.lit(x) for pid, off in offs[c].items() for x in (pid, str(off))
-            ])
-            offset = F.coalesce(
-                omap[F.col("_pid")].cast("decimal(38,0)"),
-                F.lit(0).cast("decimal(38,0)"),
-            )
-        else:
-            offset = F.lit(0).cast("decimal(38,0)")
-        out = out.withColumn(f"{c}_cum", F.sum(c).over(w) + offset)
-    out = out.drop("_pid")
-    return (out, dict(acc)) if with_totals else out
+    running = {"_n": F.row_number().over(w), **{c: F.sum(c).over(w) for c in sums}}
+    aggs = [F.count(F.lit(1)).alias("_n")] + [F.sum(c).alias(c) for c in sums]
+    if not by:
+        rows = s.groupBy("_pid").agg(*aggs).collect()
+        src.unpersist()
+        acc = {c: 0 for c in ["_n"] + sums}
+        pairs: dict[str, list] = {c: [] for c in acc}
+        counts: list = []
+        for r in sorted(rows, key=lambda r: r["_pid"]):
+            counts += [F.lit(r["_pid"]), F.lit(str(r["_n"]))]
+            for c in acc:
+                pairs[c] += [F.lit(r["_pid"]), F.lit(str(acc[c]))]
+                acc[c] += int(r[c] or 0)
 
+        def per_pid(kv, dtype):
+            m = F.create_map(*kv)[F.col("_pid")] if kv else F.lit(None)
+            return F.coalesce(m, F.lit("0")).cast(dtype)
 
-def _grouped_row_number(df: DataFrame, by: list[str], value_col: str,
-                        rank_col: str, total_col: str):
-    """Distributed PER-GROUP 1-based rank by ``value_col`` plus the
-    group total, without ever serializing a group into one window task
-    — the grouped twin of ``_global_cumsum`` (guide §2.5: a
-    low-cardinality or hub group key turns the plain
-    ``row_number().over(partitionBy(by).orderBy(v))`` plan into
-    N_groups serial sort tasks; lineitem_trimmed_mean's 3-value
-    l_returnflag sorted 3 x 2M rows on 3 cores, 9.8 s at sf1).
-
-    Mechanism: range-repartition on (by..., value) — lexicographic, so
-    each group occupies a contiguous partition RUN and one partition
-    holds at most a bounded value range of it — then per-(partition,
-    group) local row_number plus a driver-built offset map at the
-    (partition, group) grain (tiny: partitions x groups rows, attached
-    via a broadcast null-safe join, not a literal map, so any group-key
-    type/NULL works). Same persist/cache discipline as _global_cumsum:
-    the sorted table stays cached so the offset map describes exactly
-    the partitions the windowed job reads (release handle attached by
-    the CALLER on its result).
-
-    Tie order within equal (by, value) is arbitrary-but-valid, exactly
-    like the window row_number it replaces. Returns (ranked_df, sorted_cache)
-    — ranked_df carries ``rank_col`` and ``total_col``.
-    """
-    parts = df.sparkSession.sparkContext.defaultParallelism or 8
-    order = [F.col(c).asc() for c in by] + [F.col(value_col).asc()]
-    src = df.persist()
-    s = (
-        src.repartitionByRange(parts, *order)
-        .sortWithinPartitions(*order)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
-    )
-    rows = s.groupBy("_pid", *by).agg(F.count(F.lit(1)).alias("_c")).collect()
-    src.unpersist()
-    acc: dict = {}
-    recs = []
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        key = tuple(r[c] for c in by)
-        recs.append({"_pid": r["_pid"], **{c: r[c] for c in by},
-                     "_off": acc.get(key, 0)})
-        acc[key] = acc.get(key, 0) + r["_c"]
-    for rec in recs:
-        rec["_tot"] = acc[tuple(rec[c] for c in by)]
-    spark = df.sparkSession
-    off_schema = T.StructType(
-        [T.StructField("_pid", T.IntegerType(), False)]
-        + [T.StructField(c, df.schema[c].dataType, True) for c in by]
-        + [T.StructField("_off", T.LongType(), False),
-           T.StructField("_tot", T.LongType(), False)]
-    )
-    offs = spark.createDataFrame(
-        [tuple(rec[f.name] for f in off_schema.fields) for rec in recs],
-        schema=off_schema,
-    )
-    w = W.partitionBy("_pid", *by).orderBy(F.col(value_col).asc())
-    local = s.withColumn("_lr", F.row_number().over(w))
-    cond = local["_pid"] == offs["_pid"]
-    for c in by:
-        cond = cond & local[c].eqNullSafe(offs[c])
-    ranked = local.join(F.broadcast(offs), cond).select(
-        *[local[c] for c in df.columns],
-        (F.col("_lr") + F.col("_off")).alias(rank_col),
-        F.col("_tot").alias(total_col),
-    )
-    return ranked, s
+        # Recomputing a released cache re-samples the range boundaries:
+        # some partition then holds more rows than counted here, so fail
+        # loudly instead of numbering it with another partition's offset.
+        stale = F.row_number().over(w) > per_pid(counts, "long")
+        err = F.raise_error(F.lit(
+            "prefix_scan: the cached sorted frame this result reads was "
+            "released and recomputed with new range boundaries; rebuild "
+            "the frame"))
+        out = s
+        for c in cols:
+            offset = per_pid(pairs[c], "long" if c == "_n" else "decimal(38,0)")
+            out = out.withColumn(
+                named[c], F.when(stale, err).otherwise(running[c] + offset))
+        out = out.drop("_pid")
+        totals = {label[c]: acc[c] for c in cols}
+    else:
+        # both sides read the one cached relation, so the count table
+        # describes exactly the partitions the numbered side holds
+        tag = {c: f"_ps{i}" for i, c in enumerate(by)}
+        before = (W.partitionBy(*by).orderBy("_pid")
+                  .rowsBetween(W.unboundedPreceding, -1))
+        offs = s.groupBy("_pid", *by).agg(*aggs).select(
+            F.col("_pid").alias("_ps_pid"),
+            *[F.col(c).alias(tag[c]) for c in by],
+            *[F.coalesce(F.sum(c).over(before), F.lit(0)).alias(f"_ps_off{c}")
+              for c in cols],
+            *[F.sum(c).over(W.partitionBy(*by)).alias(f"{label[c]}_total")
+              for c in cols],
+        )
+        local = s.select(*df.columns, "_pid",
+                         *[running[c].alias(f"_ps_run{c}") for c in cols])
+        cond = F.col("_pid") == F.col("_ps_pid")
+        for c in by:
+            cond = cond & F.col(c).eqNullSafe(F.col(tag[c]))
+        out = local.join(offs, cond).select(
+            *df.columns,
+            *[(F.col(f"_ps_run{c}") + F.col(f"_ps_off{c}")).alias(named[c])
+              for c in cols],
+            *[f"{label[c]}_total" for c in cols],
+        )
+        totals = None
+    out._docetl_cached_input = [s]
+    return carry_caches(out, df, out), totals
 
 
 def _checked_binary_label(label_col: str, op: str):
@@ -1883,7 +1881,7 @@ def auc_rank(
     sum is a window riding the group shuffle; WITHOUT ``by`` — where a
     bare global window would drag every distinct score (≈ row count for
     a continuous score) into ONE partition — it runs through the
-    distributed range-partitioned prefix sum (_global_cumsum), the same
+    distributed range-partitioned prefix sum (prefix_scan), the same
     posture as rank.py's global rank.
     """
     reserved = {"n_pos", "n_neg", "auc_bp", "_auc_v", "_auc_l", "_auc_p",
@@ -1906,8 +1904,9 @@ def auc_rank(
         wcum = W.partitionBy(*part).orderBy(F.col("_auc_v").asc())
         cum = per_score.withColumn("_auc_cum", F.sum("_auc_c").over(wcum))
     else:
-        cum = _global_cumsum(per_score, "_auc_v", ["_auc_c"]) \
-            .withColumnRenamed("_auc_c_cum", "_auc_cum")
+        scanned, _ = prefix_scan(per_score, "_auc_v", sums=["_auc_c"])
+        cum = carry_caches(
+            scanned.withColumnRenamed("_auc_c_cum", "_auc_cum"), scanned)
     # a tie group occupying ranks (cum-c, cum] has 2*midrank = 2*cum - c + 1
     sums = cum.groupBy(*(by or [])).agg(
         F.sum("_auc_p").alias("_np"),
@@ -1918,7 +1917,7 @@ def auc_rank(
     )
     # an empty input would leave the global (no-by) aggregate emitting
     # one all-NULL row — "no data, no figure": it vanishes instead
-    return sums.filter(F.col("_np").isNotNull()).select(
+    return carry_caches(sums.filter(F.col("_np").isNotNull()).select(
         *(by or []),
         F.col("_np").cast("long").alias("n_pos"),
         F.col("_nn").cast("long").alias("n_neg"),
@@ -1926,7 +1925,7 @@ def auc_rank(
             (F.col("_np") > 0) & (F.col("_nn") > 0),
             F.expr("CAST((_auc_s2 - _np * (_np + 1)) * 10000 DIV (2 * _np * _nn) AS BIGINT)"),
         ).alias("auc_bp"),
-    )
+    ), cum)
 
 
 def chi_square_bp(
@@ -2051,7 +2050,7 @@ def ks_statistic(
     Plan: ONE shuffle on (by, value) collapses to distinct pooled
     values with per-side counts map-side; the two cumulative sums ride
     one window over that shuffle (with ``by``) or the distributed
-    range-partitioned prefix sum (_global_cumsum, WITHOUT ``by`` —
+    range-partitioned prefix sum (prefix_scan, WITHOUT ``by`` —
     a continuous value column's distinct count tracks row count, so a
     bare global window would collapse to one partition); a final max
     re-agg. The global path's side totals come back from the prefix
@@ -2086,18 +2085,16 @@ def ks_statistic(
             .withColumn("_nb", F.sum("_ks_b").over(wall))
         )
     else:
-        cum, tots = _global_cumsum(
-            per_val, "_ks_v", ["_ks_a", "_ks_b"], with_totals=True
-        )
-        cum = (
-            cum.withColumnRenamed("_ks_a_cum", "_ca")
+        scanned, tots = prefix_scan(per_val, "_ks_v", sums=["_ks_a", "_ks_b"])
+        cum = carry_caches(
+            scanned.withColumnRenamed("_ks_a_cum", "_ca")
             .withColumnRenamed("_ks_b_cum", "_cb")
             # side totals from the helper's driver loop, as literals
             .withColumn("_na", F.lit(str(tots["_ks_a"])).cast("decimal(38,0)"))
-            .withColumn("_nb", F.lit(str(tots["_ks_b"])).cast("decimal(38,0)"))
-        )
+            .withColumn("_nb", F.lit(str(tots["_ks_b"])).cast("decimal(38,0)")),
+            scanned)
     gap = F.abs(F.col("_ca") * F.col("_nb") - F.col("_cb") * F.col("_na"))
-    return (
+    return carry_caches(
         cum.withColumn("_gap", gap)
         .groupBy(*(by or []))
         # empty input: the global aggregate's all-NULL row vanishes
@@ -2112,8 +2109,8 @@ def ks_statistic(
             " CAST(ks_num AS DECIMAL(38,0)) * 10000"
             " DIV (CAST(n_a AS DECIMAL(38,0)) * CAST(n_b AS DECIMAL(38,0)))"
             " END AS BIGINT)"))
-        .filter(F.col("n_a").isNotNull())
-    )
+        .filter(F.col("n_a").isNotNull()),
+        cum)
 
 
 def concentration_hhi(
@@ -2254,7 +2251,7 @@ def mode_by(
     row_number + a total-sum over a bare partitionless window on the
     GLOBAL path (by=None), collapsing the whole distinct-value table
     into one partition when the value column is high-cardinality (r9
-    ADVICE) — the exact posture _global_cumsum exists to avoid. The
+    ADVICE) — the exact posture prefix_scan exists to avoid. The
     aggregation pair is flat in distinct-value cardinality on both
     paths and partial-aggregates executor-side.
     """
@@ -2323,7 +2320,7 @@ def lift_table(
 
     Plan: with ``by``, the ntile window per group (one sorted task per
     group); WITHOUT ``by``, the distributed range-partitioned global
-    rank (rank.py) — never a bare global window — mapped to the EXACT
+    rank (prefix_scan) — never a bare global window — mapped to the EXACT
     NTILE assignment via the shared closed form (_ntile_from_rank, so
     the two paths can never diverge), then one count-bounded
     aggregation to ``buckets`` rows and two cumulative windows over
@@ -2348,16 +2345,14 @@ def lift_table(
         w = W.partitionBy(*[F.col(c) for c in by]).orderBy(*order)
         bucketed = base.withColumn("bucket", F.ntile(buckets).over(w).cast("long"))
     else:
-        from ..operators.rank import _global_row_number_with_total
-
         # r11 optimization (guide §2.4): total as a literal from the
-        # offset map instead of a count-agg + broadcast_scalar_join
+        # driver totals instead of a count-agg + broadcast_scalar_join
         # that referenced the whole rank subtree twice (the
         # quantile_buckets fix, applied here too).
-        g, n_tot = _global_row_number_with_total(base, order, "_lt_r")
-        bucketed = g.withColumn(
-            "bucket", _ntile_from_rank("_lt_r", str(int(n_tot)), int(buckets))
-        ).drop("_lt_r")
+        g, tots = prefix_scan(base, order, rank_col="_lt_r")
+        bucketed = carry_caches(g.withColumn(
+            "bucket", _ntile_from_rank("_lt_r", str(tots["_lt_r"]), int(buckets))
+        ).drop("_lt_r"), g)
     per_bucket = bucketed.groupBy(*(by or []), "bucket").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("_n"),
         F.sum("_lt_l").cast("decimal(38,0)").alias("_p"),
@@ -2375,7 +2370,7 @@ def lift_table(
         .withColumn("_tn", F.sum("_n").over(wall))
         .withColumn("_tp", F.sum("_p").over(wall))
     )
-    return cum.select(
+    return carry_caches(cum.select(
         *(by or []),
         "bucket",
         F.col("_n").cast("long").alias("n"),
@@ -2384,7 +2379,7 @@ def lift_table(
         F.expr("CAST(_cp * 10000 DIV _cn AS BIGINT)").alias("cum_rate_bp"),
         F.when(F.col("_tp") > 0, F.expr(
             "CAST(_cp * _tn * 10000 DIV (_cn * _tp) AS BIGINT)")).alias("lift_bp"),
-    )
+    ), bucketed)
 
 
 def pareto_coverage(
@@ -2412,7 +2407,7 @@ def pareto_coverage(
     Plan: one map-side-combinable rollup to (by, entity) totals —
     bounded by entity cardinality — then the descending cumulative
     share: a window riding the group shuffle (with ``by``) or the
-    distributed range-partitioned prefix sum (_global_cumsum, WITHOUT
+    distributed range-partitioned prefix sum (prefix_scan, WITHOUT
     ``by`` — entity cardinality can approach row count, e.g. a user-id
     entity, so a bare global window is not an option), a small explode
     over the thresholds, and a min-k re-agg.
@@ -2421,7 +2416,7 @@ def pareto_coverage(
     if not ts or ts[0] <= 0 or ts[-1] > 10000:
         raise ValueError("thresholds_bp must be in (0, 10000]")
     reserved = {"threshold_bp", "k", "share_bp", "_pc_e", "_pc_x", "_pc_k",
-                "_pc_cum", "_pc_tot", "_pc_one", "_sk"}
+                "_pc_cum", "_pc_tot", "_sk"}
     clash = sorted(reserved & set(by or []))
     if clash:
         raise ValueError(f"pareto_coverage reserves column names {clash}")
@@ -2449,16 +2444,13 @@ def pareto_coverage(
             .withColumn("_pc_tot", F.sum("_pc_x").over(wall))
         )
     else:
-        cum, tots = _global_cumsum(
-            per_entity.withColumn("_pc_one", F.lit(1).cast("decimal(38,0)")),
-            order, ["_pc_x", "_pc_one"], with_totals=True,
-        )
-        cum = (
-            cum.withColumnRenamed("_pc_x_cum", "_pc_cum")
-            .withColumn("_pc_k", F.col("_pc_one_cum").cast("long"))
-            # group total from the helper's driver loop, as a literal
-            .withColumn("_pc_tot", F.lit(str(tots["_pc_x"])).cast("decimal(38,0)"))
-        )
+        scanned, tots = prefix_scan(
+            per_entity, order, sums=["_pc_x"], rank_col="_pc_k")
+        cum = carry_caches(
+            scanned.withColumnRenamed("_pc_x_cum", "_pc_cum")
+            # group total from the driver totals, as a literal
+            .withColumn("_pc_tot", F.lit(str(tots["_pc_x"])).cast("decimal(38,0)")),
+            scanned)
     tlit = F.explode(F.array(*[F.lit(t) for t in ts]))
     hit = (
         cum.select(*(by or []), "_pc_k", "_pc_cum", "_pc_tot",
@@ -2469,7 +2461,7 @@ def pareto_coverage(
                >= F.col("threshold_bp").cast("decimal(38,0)") * F.col("_pc_tot"))
         )
     )
-    return (
+    return carry_caches(
         hit.groupBy(*(by or []), "threshold_bp")
         .agg(
             F.min("_pc_k").alias("k"),
@@ -2477,8 +2469,8 @@ def pareto_coverage(
                 F.expr("CAST(_pc_cum * 10000 DIV _pc_tot AS BIGINT)"),
                 F.col("_pc_k"),
             ).alias("share_bp"),
-        )
-    )
+        ),
+        cum)
 
 
 def correlation_r2(

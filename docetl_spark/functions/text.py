@@ -632,14 +632,14 @@ def vocab_growth(df, text_col: str, *, id_col: str, step: int = 100):
 
     Plan: one explode → per-(term) min(id) aggregation at vocabulary
     cardinality, one count join back to the per-document grain, then
-    _global_cumsum (the distributed range-partitioned prefix sum —
+    prefix_scan (the distributed range-partitioned prefix sum —
     the per-document table is row-cardinality, exactly the shape a
     bare global window must not see). The checkpoint filter keeps the
     output curve-length, not corpus-length.
     """
     if step < 1:
         raise ValueError("step must be >= 1")
-    from .stats import _global_cumsum
+    from .stats import carry_caches, prefix_scan
 
     toks = (
         df.select(F.col(id_col), F.explode(
@@ -661,25 +661,23 @@ def vocab_growth(df, text_col: str, *, id_col: str, step: int = 100):
             F.col(id_col),
             F.coalesce("_vg_tok", F.lit(0).cast("decimal(38,0)")).alias("_vg_tok"),
             F.coalesce("_vg_new", F.lit(0).cast("decimal(38,0)")).alias("_vg_new"),
-            F.lit(1).cast("decimal(38,0)").alias("_vg_one"),
         )
-    # with_totals: the prefix-sum driver loop already holds the exact
-    # totals — no second scan for the final-document checkpoint
-    cum, totals = _global_cumsum(
-        docs, F.col(id_col).asc(), ["_vg_tok", "_vg_new", "_vg_one"],
-        with_totals=True,
+    # the scan's driver totals already hold the exact document count —
+    # no second scan for the final-document checkpoint
+    cum, totals = prefix_scan(
+        docs, F.col(id_col).asc(), sums=["_vg_tok", "_vg_new"], rank_col="_vg_pos",
     )
-    pos = F.col("_vg_one_cum").cast("long")
-    total = int(totals["_vg_one"])
-    return (
+    pos = F.col("_vg_pos")
+    total = totals["_vg_pos"]
+    return carry_caches(
         cum.filter((pos % int(step) == 0) | (pos == total))
         .select(
             pos.alias("n_docs"),
             F.col(id_col).alias("doc_id"),
             F.col("_vg_tok_cum").cast("long").alias("cum_tokens"),
             F.col("_vg_new_cum").cast("long").alias("cum_vocab"),
-        )
-    )
+        ),
+        cum)
 
 
 def ngram_novelty(df, text_col: str, *, id_col: str, n: int = 3):

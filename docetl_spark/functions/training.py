@@ -23,7 +23,7 @@ import re as _re
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from .stats import bounded_global_window
+from .stats import bounded_global_window, carry_caches, prefix_scan
 from .text import token_count
 
 # ASCII \s only, matching JVM regex \s and DuckDB/RE2 semantics — a
@@ -748,7 +748,7 @@ def assign_splits_exact(
     quota line. Scale notes: with ``strata`` the rank is a per-stratum
     window, so a single giant stratum serialises into one task (same
     bound as select_top_frac's exact path); WITHOUT strata the rank
-    rides rank.py's distributed range-partitioned _global_row_number —
+    rides the distributed range-partitioned stats.prefix_scan —
     a bare W.orderBy() window would drag the whole corpus into one
     partition.
     """
@@ -765,18 +765,16 @@ def assign_splits_exact(
             "_n", F.count(F.lit(1)).over(W.partitionBy(*part))
         )
     else:
-        from ..operators.rank import _global_row_number_with_total
-
         # r11 optimization (guide §2.4): total as a literal from the
-        # offset map instead of a count-agg + broadcast_scalar_join
+        # driver totals instead of a count-agg + broadcast_scalar_join
         # that referenced the whole rank subtree twice (the
         # quantile_buckets fix, applied here too).
         keyed = df.withColumn("_mk", F.md5(key)).withColumn("_kk", key)
-        ranked, n_tot = _global_row_number_with_total(
-            keyed, [F.col("_mk").asc(), F.col("_kk").asc()], "_rnk"
+        ranked, tots = prefix_scan(
+            keyed, [F.col("_mk").asc(), F.col("_kk").asc()], rank_col="_rnk"
         )
-        out = ranked.withColumn(
-            "_n", F.lit(int(n_tot)).cast("long")).drop("_mk", "_kk")
+        out = carry_caches(ranked.withColumn(
+            "_n", F.lit(tots["_rnk"]).cast("long")).drop("_mk", "_kk"), ranked)
     expr = None
     cum = 0
     for n in names[:-1]:
@@ -785,7 +783,7 @@ def assign_splits_exact(
         cond = F.col("_rnk") * F.lit(total) <= F.col("_n") * F.lit(cum)
         expr = F.when(cond, F.lit(n)) if expr is None else expr.when(cond, F.lit(n))
     expr = F.lit(names[-1]) if expr is None else expr.otherwise(F.lit(names[-1]))
-    return out.withColumn("split", expr).drop("_rnk", "_n")
+    return carry_caches(out.withColumn("split", expr).drop("_rnk", "_n"), out)
 
 
 # ------------------------------------------------------- mixture planning
@@ -1312,7 +1310,6 @@ def curriculum_order(
     clash = sorted(reserved & set(id_cols))
     if clash:
         raise ValueError(f"curriculum_order reserves column names {clash}")
-    from ..operators.rank import _global_row_number
     from .stats import quantile_buckets
 
     # project EARLY: the distributed-rank machinery persists its input
@@ -1324,21 +1321,20 @@ def curriculum_order(
     tiered = quantile_buckets(
         slim.filter(F.col(score_col).isNotNull()), score_col, int(n_tiers),
         tiebreak=list(id_cols), bucket_col="tier",
-    ).withColumn(
+    )
+    tiered = carry_caches(tiered.withColumn(
         "_cu_h",
         F.md5(F.concat_ws("|", F.lit(salt),
                           *[F.col(c).cast("string") for c in id_cols])),
-    )
-    from ..operators.rank import _global_row_number_with_total
-
-    ranked, total = _global_row_number_with_total(
+    ), tiered)
+    ranked, tots = prefix_scan(
         tiered,
         [F.col("tier").asc(), F.col("_cu_h").asc()]
         + [F.col(c).asc() for c in id_cols],
-        "_cu_r",
+        rank_col="_cu_r",
     )
-    # Tier offsets in CLOSED FORM from the total the rank machinery's
-    # driver offset map already holds: quantile_buckets' exact-NTILE
+    # Tier offsets in CLOSED FORM from the total prefix_scan's driver
+    # totals already hold: quantile_buckets' exact-NTILE
     # split gives tier t (1-based) exactly q+1 rows for t <= rem and q
     # otherwise (q = total DIV n_tiers, rem = total % n_tiers), so the
     # rank offset of tier t is (t-1)*q + min(t-1, rem). The former
@@ -1346,23 +1342,20 @@ def curriculum_order(
     # same numbers at runtime while re-referencing the whole ranked
     # subtree in the plan (r11 plan audit: docs_curriculum_dense at 240
     # Exchange nodes, largely from this doubling).
-    q, rem = int(total) // int(n_tiers), int(total) % int(n_tiers)
+    q, rem = divmod(tots["_cu_r"], int(n_tiers))
     off = (
         (F.col("tier") - 1) * F.lit(q)
         + F.least(F.col("tier") - 1, F.lit(rem))
     ).cast("long")
-    out = (
-        ranked.select(
-            *id_cols, score_col, F.col("tier").cast("long").alias("tier"),
-            ((F.col("_cu_r") - off - 1) * int(n_tiers)
-             + F.col("tier")).cast("long").alias("position"),
-        )
-    )
+    out = carry_caches(ranked.select(
+        *id_cols, score_col, F.col("tier").cast("long").alias("tier"),
+        ((F.col("_cu_r") - off - 1) * int(n_tiers)
+         + F.col("tier")).cast("long").alias("position"),
+    ), ranked)
     if dense_positions:
-        out = _global_row_number(
-            out, [F.col("position").asc()], "_cu_dense"
-        ).select(
+        dense, _ = prefix_scan(out, [F.col("position").asc()], rank_col="_cu_dense")
+        out = carry_caches(dense.select(
             *id_cols, score_col, "tier",
-            F.col("_cu_dense").cast("long").alias("position"),
-        )
+            F.col("_cu_dense").alias("position"),
+        ), dense)
     return out

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..backend import ModelBackend
 from ..functions.similarity import banded_candidate_pairs_two_sided
+from ..functions.stats import carry_caches, prefix_scan
 from .blocking import probe_embed_dim
 from .resolve import embed_column
 from .semantic import render_prompt, run_concurrently
@@ -132,6 +133,7 @@ def stratified_limit_pairs(
         F.col(other_len).desc(), *[F.col(c).asc() for c in other_cols]
     )
     ranked = plen.withColumn("_rn", F.row_number().over(w_in))
+    pinned = [plen]
     if extra == 0:
         # the budget divides evenly: every group's quota is the constant
         # `base`, so the distinct-key global rank (one distinct + sort +
@@ -143,10 +145,10 @@ def stratified_limit_pairs(
         # funnel every key through one partition); the ranked key table
         # is narrow and joins back on the stratum key (broadcast when
         # small, AQE decides).
-        from .rank import _global_row_number
-
         key_order = [F.col(c).asc() for c in key_cols]
-        gidx = _global_row_number(plen.select(*key_cols).distinct(), key_order, "_gidx")
+        gidx, _ = prefix_scan(plen.select(*key_cols).distinct(), key_order,
+                              rank_col="_gidx")
+        pinned += gidx._docetl_cached_input
         out = (
             ranked.join(gidx, key_cols)
             .withColumn("_quota", F.lit(base) + F.when(F.col("_gidx") <= extra, 1).otherwise(0))
@@ -158,7 +160,8 @@ def stratified_limit_pairs(
     # returning a lazy child of plen would pin its storage for the whole
     # session (the leak shows up as evicted neighbors in long sessions)
     out = out.localCheckpoint(eager=True)
-    plen.unpersist()
+    for c in pinned:
+        c.unpersist()
     return out
 
 
@@ -358,10 +361,9 @@ def bucketed_stratified_pairs(
     if extra == 0:
         out = joined.filter(F.col("_crn") <= base)
     else:
-        from .rank import _global_row_number
-
-        gidx = _global_row_number(
-            S2.select(*skeys).distinct(), [F.col(c).asc() for c in skeys], "_gidx"
+        gidx, _ = prefix_scan(
+            S2.select(*skeys).distinct(), [F.col(c).asc() for c in skeys],
+            rank_col="_gidx",
         )
         out = (
             joined.join(gidx, skeys)
@@ -371,7 +373,8 @@ def bucketed_stratified_pairs(
             )
             .filter(F.col("_crn") <= F.col("_quota"))
         )
-    return out.select(*lk, *rk)
+    kept = out.select(*lk, *rk)
+    return carry_caches(kept, gidx) if extra else kept
 
 
 def equijoin(
@@ -648,4 +651,4 @@ def equijoin(
         matched = matched.withColumn("_rn", F.row_number().over(w)).filter(
             F.col("_rn") <= limits["right"]).drop("_rn")
 
-    return matched.drop(*key_names)
+    return carry_caches(matched.drop(*key_names), *pair_parts)

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..backend import ModelBackend
+from ..functions.stats import carry_caches, prefix_scan
 from ..operators.sample import cosine_sim
 from .resolve import embed_column
 from .semantic import render_prompt, widen_for_model_stage
@@ -48,61 +49,6 @@ def _likert_scores(
     return widen_for_model_stage(df).mapInPandas(run, schema=out_schema)
 
 
-def _global_row_number(df: DataFrame, order: list, rank_col: str) -> DataFrame:
-    """Distributed global 1-based rank. ``W.orderBy(...)`` without a
-    partition key moves every row into ONE partition — fine at test
-    scale, fatal at 100 TB. Implemented as the lit-1 case of
-    stats._global_cumsum (the SINGLE home for the range-repartition +
-    per-partition-run + driver-offset-map mechanism: persist-for-
-    boundary-sampling discipline, cached-sort boundary pinning, and any
-    future tie/precondition fix live there once). Requires a total
-    order (callers pass tiebreak columns), so output is deterministic."""
-    from ..functions.stats import _global_cumsum
-
-    one = "_grn_one"
-    clash = sorted({one, f"{one}_cum", "_pid"} & set(df.columns))
-    if clash:
-        raise ValueError(
-            f"_global_row_number reserves column names {clash} — rename the inputs"
-        )
-    out = _global_cumsum(
-        df.withColumn(one, F.lit(1).cast("decimal(38,0)")), order, [one]
-    )
-    return out.withColumn(
-        rank_col, F.col(f"{one}_cum").cast("long")
-    ).drop(one, f"{one}_cum")
-
-
-def _global_row_number_with_total(
-    df: DataFrame, order: list, rank_col: str
-) -> tuple[DataFrame, int]:
-    """``_global_row_number`` plus the exact total row count, for free:
-    ``_global_cumsum`` already collects per-partition counts for the
-    offset map, so the driver holds the grand total before any action
-    runs. Callers that would otherwise attach the count via an extra
-    aggregation + broadcast join (duplicating the whole rank subtree in
-    the plan — the r11 plan audit measured customer_rfm at 968 Exchange
-    nodes from exactly this doubling, nested three deep) can use the
-    returned int as a literal instead."""
-    from ..functions.stats import _global_cumsum
-
-    one = "_grn_one"
-    clash = sorted({one, f"{one}_cum", "_pid"} & set(df.columns))
-    if clash:
-        raise ValueError(
-            f"_global_row_number reserves column names {clash} — rename the inputs"
-        )
-    out, totals = _global_cumsum(
-        df.withColumn(one, F.lit(1).cast("decimal(38,0)")), order, [one],
-        with_totals=True,
-    )
-    return (
-        out.withColumn(rank_col, F.col(f"{one}_cum").cast("long"))
-        .drop(one, f"{one}_cum"),
-        int(totals[one]),
-    )
-
-
 def _calibrated_embedding_rank(
     df: DataFrame,
     backend: ModelBackend,
@@ -123,7 +69,7 @@ def _calibrated_embedding_rank(
     sample = [r.asDict(recursive=True) for r in df.limit(sample_size).collect()]
     if len(sample) <= 1:
         order = [F.col(c).asc() for c in (tiebreak or df.columns)]
-        return _global_row_number(df, order, rank_col)
+        return prefix_scan(df, order, rank_col=rank_col)[0]
 
     # comparison-QURK: all-pairs votes, order anchors by wins (rank.py:195-307)
     wins = [0] * len(sample)
@@ -168,8 +114,8 @@ def _calibrated_embedding_rank(
     assigned = emb.mapInPandas(assign, schema=out_schema)
     order = [F.col("_anchor_idx").asc(), F.col("_anchor_sim").desc()]
     order += [F.col(c).asc() for c in (tiebreak or [])]
-    ranked = _global_row_number(assigned, order, rank_col)
-    return ranked.drop("_emb", "_anchor_idx", "_anchor_sim")
+    ranked, _ = prefix_scan(assigned, order, rank_col=rank_col)
+    return carry_caches(ranked.drop("_emb", "_anchor_idx", "_anchor_sim"), ranked)
 
 
 _MAX_DEFAULT_NUM_BATCHES = 20_000
@@ -303,7 +249,8 @@ def _comparison_qurk_rank(
     )
     scored = keyed.join(win_counts, "_row_key", "left").fillna({"_wins": 0})
     order = [F.col("_wins").desc()] + [F.col(c).asc() for c in (tiebreak or [])]
-    return _global_row_number(scored, order, rank_col).drop("_row_key", "_wins")
+    ranked, _ = prefix_scan(scored, order, rank_col=rank_col)
+    return carry_caches(ranked.drop("_row_key", "_wins"), ranked)
 
 
 def _picky_window_refine(
@@ -420,7 +367,8 @@ def rank(
 
     order = [F.col("_score").desc() if direction == "desc" else F.col("_score").asc()]
     order += [F.col(c).asc() for c in (tiebreak or [])]
-    ranked = _global_row_number(scored, order, rank_col).drop("_score")
+    scanned, _ = prefix_scan(scored, order, rank_col=rank_col)
+    ranked = scanned.drop("_score")
 
     if refine_head_size and rerank_call_budget and prompt:
         # driver-coordinated sliding picky-window refinement over the head
@@ -464,4 +412,4 @@ def rank(
             new_ranks = spark.createDataFrame(rows, schema=ranked.schema)
         tail = ranked.filter(F.col(rank_col) > refine_head_size)
         ranked = new_ranks.unionByName(tail)
-    return ranked
+    return carry_caches(ranked, scanned)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 from ..backend import ModelBackend
 from ..functions.dedup import connected_components
 from ..functions.similarity import banded_candidate_pairs
+from ..functions.stats import carry_caches, prefix_scan
 from ..operators.sample import cosine_sim
 from ..types import schema_of
 from .semantic import render_prompt, run_concurrently
@@ -81,12 +82,11 @@ def sorted_neighborhood_pairs(
     (id_a, id_b), id_a < id_b."""
     if window < 2:
         raise ValueError(f"sorted_neighborhood_pairs: window must be >= 2, got {window}")
-    from .rank import _global_row_number
-
     tb = [c for c in (tiebreak or []) if c != id_col] + [id_col]
     base = df.select(id_col, F.expr(key).alias("_snk"), *[c for c in tb if c != id_col])
     order = [F.col("_snk").asc()] + [F.col(c).asc() for c in tb]
-    ranked = _global_row_number(base, order, "_rnk").select(
+    scanned, _ = prefix_scan(base, order, rank_col="_rnk")
+    ranked = scanned.select(
         id_col, "_rnk", F.expr(f"(_rnk - 1) DIV {int(window)}").alias("_b")
     )
     a = ranked.select(F.col(id_col).alias("_ia"), F.col("_rnk").alias("_ra"), F.col("_b").alias("_ba"))
@@ -98,7 +98,7 @@ def sorted_neighborhood_pairs(
     pairs = same.unionByName(adj).select(
         F.least("_ia", "_ib").alias("id_a"), F.greatest("_ia", "_ib").alias("id_b")
     )
-    return pairs.dropDuplicates(["id_a", "id_b"])
+    return carry_caches(pairs.dropDuplicates(["id_a", "id_b"]), scanned)
 
 
 def candidate_pairs(
@@ -264,7 +264,7 @@ def candidate_pairs(
             out = out.unionByName(p)
         if len(parts) > 1:
             out = out.dropDuplicates(["id_a", "id_b"])
-        return out
+        return carry_caches(out, *parts)
 
     # deterministic budget cut (reference resolve.py:526-547, made
     # replayable): dedup keeps the highest-priority source per pair,
@@ -278,23 +278,23 @@ def candidate_pairs(
         out = out.groupBy("id_a", "id_b").agg(F.min("_src").alias("_src"))
     n_pairs = out.count()
     if n_pairs <= limit_comparisons:
-        return out.select("id_a", "id_b")
+        return carry_caches(out.select("id_a", "id_b"), *parts)
     log.warning(
         "resolve: %d blocked pairs exceed limit_comparisons=%d; keeping a "
         "deterministic md5-ordered sample (code-blocked pairs first)",
         n_pairs, limit_comparisons,
     )
-    from .rank import _global_row_number
-
-    ranked = _global_row_number(
+    ranked, _ = prefix_scan(
         out.withColumn("_h", F.md5(F.concat_ws(
             "|", F.lit(str(sample_seed)),
             F.col("id_a").cast("string"), F.col("id_b").cast("string")))),
         [F.col("_src").asc(), F.col("_h").asc(),
          F.col("id_a").asc(), F.col("id_b").asc()],
-        "_grn",
+        rank_col="_grn",
     )
-    return ranked.filter(F.col("_grn") <= limit_comparisons).select("id_a", "id_b")
+    return carry_caches(
+        ranked.filter(F.col("_grn") <= limit_comparisons).select("id_a", "id_b"),
+        *parts, ranked)
 
 
 def adjudicate_pairs(
@@ -595,4 +595,5 @@ def resolve(
 
     canon = clustered.groupBy("_cluster_id").applyInPandas(canonicalize, schema=canon_schema)
     keep = [c for c in clustered.columns if c not in declared.fieldNames()]
-    return clustered.select(*keep).join(canon, "_cluster_id", "left")
+    return carry_caches(
+        clustered.select(*keep).join(canon, "_cluster_id", "left"), pairs)

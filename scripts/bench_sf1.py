@@ -41,7 +41,7 @@ QUERIES = [
     "docs_ngram_jaccard",
     "q7_nation_volume",
     # round-10 ritual additions (VERDICT r9 ask #6): the newest
-    # scale-sensitive plans — the `_global_cumsum` distributed-prefix-
+    # scale-sensitive plans — the `prefix_scan` distributed-prefix-
     # sum consumers, the re-measured mad_outliers, and two r10 reps
     "events_mad_outliers",
     "events_weighted_quantiles",

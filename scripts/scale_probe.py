@@ -615,7 +615,7 @@ def probe(spark, docs_path: str, emb_path: str, line_path: str, events_path: str
     # VALUE column, so its scale hazard is DISTINCT-VALUE cardinality,
     # not row count — probe with AND without --jitter-values and read
     # both ratios (PLANS.md round-10 table). All global paths ride
-    # _global_cumsum / the distinct-collapse; flat-ish ratios expected.
+    # prefix_scan / the distinct-collapse; flat-ish ratios expected.
     if events_path:
         from docetl_spark.sources.readers import normalize_epoch_nanos
 
@@ -651,14 +651,14 @@ def probe(spark, docs_path: str, emb_path: str, line_path: str, events_path: str
             ))
 
         if want("value_ecdf"):
-            from docetl_spark.functions.stats import _global_cumsum
+            from docetl_spark.functions.stats import prefix_scan
 
             def run_ecdf():
                 dv = evv.filter(F.col("value").isNotNull()).groupBy(
                     F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
                     .alias("vc")
                 ).agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_c"))
-                _global_cumsum(dv, F.col("vc").asc(), ["_c"]) \
+                prefix_scan(dv, F.col("vc").asc(), sums=["_c"])[0] \
                     .agg(F.count(F.lit(1))).collect()
 
             res["value_ecdf"] = timed(run_ecdf)
@@ -675,7 +675,7 @@ def probe(spark, docs_path: str, emb_path: str, line_path: str, events_path: str
 
             def run_sp():
                 # day-grain keeps the centered moments in exact range at
-                # any N; the midrank _global_cumsum path is what's probed
+                # any N; the midrank prefix_scan path is what's probed
                 d = evv.withColumn(
                     "_e", F.expr("(ts - pmod(ts, 1000000000)) DIV 1000000000"))
                 daily = d.groupBy(

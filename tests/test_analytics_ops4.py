@@ -392,7 +392,7 @@ def test_pareto_coverage_hand_checked(spark):
 
 
 def test_pareto_coverage_global_matches_by_path(spark):
-    # the _global_cumsum desc-order path must agree with the window path
+    # the prefix_scan desc-order path must agree with the window path
     from docetl_spark.functions.stats import pareto_coverage
     import random
 

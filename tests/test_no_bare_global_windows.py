@@ -9,8 +9,8 @@ window in the package routes through one of the two explicit postures:
 
 - stats.bounded_global_window — frames bounded BY CONTRACT (top-N,
   plan tables); physically the same one-partition window, silent.
-- stats._global_cumsum / rank._global_row_number — row-cardinality
-  frames; distributed range-partitioned, never one partition.
+- stats.prefix_scan — row-cardinality frames; distributed
+  range-partitioned, never one partition.
 
 A bare ``W.partitionBy()`` / ``W.orderBy(...)`` window spec in package
 code means someone has re-introduced the warning (or worse, an actual
@@ -63,7 +63,7 @@ def test_no_bare_global_window_specs_in_package():
     assert not offenders, (
         "bare global window spec(s) — route bounded-by-contract frames "
         "through stats.bounded_global_window and row-cardinality frames "
-        "through _global_cumsum/_global_row_number:\n" + "\n".join(offenders)
+        "through stats.prefix_scan:\n" + "\n".join(offenders)
     )
 
 

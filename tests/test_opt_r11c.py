@@ -16,10 +16,13 @@ from docetl_spark import FakeBackend
 
 
 def _release(out):
+    # a handle is one persisted frame or a list of them (SemanticFrame
+    # harvests both); ops built on prefix_scan carry a list
     cached = getattr(out, "_docetl_cached_input", None)
     assert cached is not None, "release handle missing"
-    assert cached.is_cached, "release handle is not a persisted frame"
-    cached.unpersist()
+    for c in cached if isinstance(cached, list) else [cached]:
+        assert c.is_cached, "release handle is not a persisted frame"
+        c.unpersist()
 
 
 def test_contingency_ops_attach_persisted_release_handles(spark):

@@ -165,13 +165,14 @@ def test_every_functions_cache_carries_release_convention():
 
 
 # ------------------------------------------------- grouped range rank
-def test_trimmed_mean_range_impl_matches_window(spark):
-    """rank_impl='range' (the grouped range-partition rank that keeps a
-    hub/low-cardinality group's sort off one task, r12 change #17) must
-    produce the identical result as the window impl — including NULL
-    group keys, ties straddling the trim boundary, and groups smaller
-    than the trim."""
-    from docetl_spark.functions.mlstats import trimmed_mean_by
+def test_trimmed_mean_range_impl_matches_window(spark, monkeypatch, tmp_path):
+    """The grouped prefix_scan rank (picked above _RANGE_RANK_MIN_BYTES;
+    it keeps a hub/low-cardinality group's sort off one task) must
+    produce the identical result as the window rank, and both must match
+    a brute-force trimmed mean — including NULL group keys, ties
+    straddling the trim boundary, and groups smaller than the trim.
+    The input is a parquet scan, so its size estimate is its file bytes."""
+    from docetl_spark.functions import mlstats
 
     rows = []
     for i in range(997):
@@ -179,36 +180,211 @@ def test_trimmed_mean_range_impl_matches_window(spark):
         v = float((i * 37) % 100) / 4.0  # heavy ties
         rows.append((g, v))
     rows.append(("tiny", 1.0))  # single-row group
-    df = spark.createDataFrame(rows, "g string, v double")
+    spark.createDataFrame(rows, "g string, v double").write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
 
-    def canon(frame):
-        return sorted((tuple(r) for r in frame.collect()),
-                      key=lambda t: (t[0] is None, t))
+    groups: dict = {}
+    for g, v in rows:
+        groups.setdefault(g, []).append(int(v * 100 + 0.5))
+    want = []
+    for g, cents in groups.items():
+        cents.sort()
+        n, k = len(cents), len(cents) * 500 // 10000
+        kept = cents[k:n - k]
+        want.append((g, n, k, len(kept), sum(kept), sum(kept) // len(kept)))
 
-    w = canon(trimmed_mean_by(df, "v", by=["g"], trim_bp=500,
-                              rank_impl="window"))
-    r = canon(trimmed_mean_by(df, "v", by=["g"], trim_bp=500,
-                              rank_impl="range"))
-    assert w == r
-    assert len(w) == 5  # NULL, a, b, c, tiny
+    def canon(tuples):
+        return sorted(tuples, key=lambda t: (t[0] is None, t))
+
+    # the window path pins nothing; the range path pins its sorted frame
+    for min_bytes, pins in ((float("inf"), False), (0, True)):
+        monkeypatch.setattr(mlstats, "_RANGE_RANK_MIN_BYTES", min_bytes)
+        got = mlstats.trimmed_mean_by(df, "v", by=["g"], trim_bp=500)
+        assert bool(getattr(got, "_docetl_cached_input", None)) == pins
+        assert canon(tuple(r) for r in got.collect()) == canon(want)
+        for h in getattr(got, "_docetl_cached_input", []):
+            h.unpersist()
+    assert len(want) == 5  # NULL, a, b, c, tiny
 
 
-def test_grouped_row_number_ranks_are_dense_per_group(spark):
-    """Every group gets ranks 1..n with the correct total, regardless of
-    how the range partitioner splits the group across partitions."""
-    from docetl_spark.functions.stats import _grouped_row_number
+def test_trimmed_mean_unsized_input_takes_window(spark, monkeypatch):
+    """A Python-list input has no size statistics (it estimates
+    spark.sql.defaultSizeInBytes); it counts as small and keeps the
+    window rank, whatever the threshold."""
+    from docetl_spark.frame import SemanticFrame
+    from docetl_spark.functions import mlstats
 
-    df = spark.createDataFrame(
-        [("g%d" % (i % 3), float(i % 7)) for i in range(500)], "g string, v double")
-    ranked, handle = _grouped_row_number(df, ["g"], "v", "_r", "_n")
-    rows = ranked.collect()
-    handle.unpersist()
-    by_g = {}
-    for r in rows:
-        by_g.setdefault(r["g"], []).append((r["_r"], r["_n"]))
-    for g, pairs in by_g.items():
-        ranks = sorted(p[0] for p in pairs)
-        n = pairs[0][1]
-        assert ranks == list(range(1, len(pairs) + 1)), g
-        assert all(p[1] == len(pairs) for p in pairs), g
-        assert n == len(pairs)
+    monkeypatch.setattr(mlstats, "_RANGE_RANK_MIN_BYTES", 0)
+    fr = SemanticFrame.from_list(spark, [{"g": "a", "v": 1.0}, {"g": "a", "v": 2.0}])
+    got = mlstats.trimmed_mean_by(fr.df, "v", by=["g"])
+    assert getattr(got, "_docetl_cached_input", None) is None
+    assert [tuple(r) for r in got.collect()] == [("a", 2, 0, 2, 300, 150)]
+
+
+def _scan_input(spark, case):
+    """(frame, by) for one prefix_scan parity case; ``id`` is unique."""
+    if case.endswith("empty"):
+        rows = []
+    elif case == "global_ties":
+        rows = [(i, None, float(i % 5)) for i in range(300)]
+    elif case == "global_null_order":
+        rows = [(i, None, None if i % 4 == 0 else float(i % 9)) for i in range(300)]
+    elif case == "grouped_ties":
+        rows = [(i, "g%d" % (i % 3), float(i % 7)) for i in range(500)]
+    elif case == "grouped_nulls":
+        rows = [(i, None if i % 5 == 0 else "g%d" % (i % 3),
+                 None if i % 7 == 0 else float(i % 6)) for i in range(400)]
+    else:  # grouped_split
+        # one hub group holds ~95% of the rows over many distinct values,
+        # so the range partitioner must split it across partitions
+        rows = [(i, "hub" if i % 20 else "g%d" % (i % 3), float(i % 97))
+                for i in range(1200)]
+    df = spark.createDataFrame(rows, "id long, g string, v double")
+    return df, (["g"] if case.startswith("grouped") else [])
+
+
+@pytest.mark.parametrize("case", [
+    "global_ties", "global_null_order", "global_empty",
+    "grouped_ties", "grouped_nulls", "grouped_split", "grouped_empty",
+])
+def test_prefix_scan_matches_window(spark, case):
+    """prefix_scan's rank and running sum equal a window row_number()
+    and ROWS-frame sum() over the same order, per group or globally.
+    Tied rows may take their ranks in any order, so each (group, value)
+    tie group is compared as the multiset of its (rank, running sum)
+    pairs — ``x`` depends on the value only, so that multiset is
+    permutation-invariant."""
+    from pyspark.sql import Window as W
+
+    from docetl_spark.functions.stats import prefix_scan
+
+    df, by = _scan_input(spark, case)
+    df = df.withColumn("x", F.coalesce(F.col("v"), F.lit(-1.0)).cast("long") * 2 + 3)
+    order = [F.col("v").asc()]
+    got, totals = prefix_scan(df, order, by=by, sums=["x"], rank_col="r")
+    ws = (W.partitionBy(*by) if by else W).orderBy(*order) \
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    want = df.withColumn("r", F.row_number().over(ws)) \
+        .withColumn("x_cum", F.sum("x").over(ws))
+
+    def tie_groups(rows):
+        out = {}
+        for row in rows:
+            out.setdefault((row["g"], row["v"]), []).append(
+                (int(row["r"]), int(row["x_cum"])))
+        return {k: sorted(v) for k, v in out.items()}
+
+    rows = got.collect()
+    assert len(rows) == df.count()
+    assert tie_groups(rows) == tie_groups(want.collect())
+    n = {}
+    s = {}
+    for row in df.collect():
+        n[row["g"]] = n.get(row["g"], 0) + 1
+        s[row["g"]] = s.get(row["g"], 0) + row["x"]
+    if by:
+        assert totals is None
+        for row in rows:
+            assert (row["r_total"], row["x_total"]) == (n[row["g"]], s[row["g"]])
+    else:
+        assert totals == {"r": sum(n.values()), "x": sum(s.values())}
+    for h in got._docetl_cached_input:
+        h.unpersist()
+
+
+def test_prefix_scan_recomputed_after_release_fails_loudly(spark):
+    """The driver offsets describe the partitions of the cached sorted
+    frame. Once that cache is released, a recompute re-samples the range
+    boundaries (20k unique keys: the sample is random), and the scan
+    must raise rather than number rows with another partition's offset."""
+    from docetl_spark.functions.stats import prefix_scan
+
+    df = spark.range(20000).selectExpr("id", "(id * 7919) % 20000 AS v")
+    got, totals = prefix_scan(df.repartition(4), "v", rank_col="r")
+    assert totals == {"r": 20000}
+    for h in got._docetl_cached_input:
+        h.unpersist()
+    with pytest.raises(Exception, match="rebuild the frame"):
+        got.collect()
+
+
+def test_prefix_scan_reserves_its_count_key(spark):
+    from docetl_spark.functions.stats import prefix_scan
+
+    df = spark.range(3).selectExpr("id AS _n")
+    with pytest.raises(ValueError, match="_n"):
+        prefix_scan(df, "_n", sums=["_n"])
+
+
+# ------------------------------------------------- cache release on collect
+def test_collect_releases_prefix_scan_caches(spark, sf_dir):
+    """Collecting rfm_segments (three nested global scans) and the
+    global quantile_buckets through SemanticFrame releases every cache
+    the scans pinned — none stays for the session."""
+    from docetl_spark.frame import SemanticFrame
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    orders = SemanticFrame.read_parquet(spark, f"{sf_dir}/orders.parquet") \
+        .with_columns(epoch="CAST(datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01') AS BIGINT)")
+    rfm = orders.rfm_segments(keys=["o_custkey"], ts_col="epoch",
+                              amount_col="o_totalprice")
+    assert len(rfm.collect()) > 0
+    buckets = orders.quantile_buckets("o_totalprice", 4, tiebreak=["o_orderkey"])
+    assert len(buckets.collect()) > 0
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+# ------------------------------------------------- build-phase job budget
+# Building customer_rfm fires the driver collects of three nested global
+# scans. 22 is what the range-rank helpers prefix_scan replaced fired here
+# (sf0.001, this suite's session settings); an extra eager action in
+# prefix_scan shows up as a failure instead of as drift.
+RFM_BUILD_JOBS = 22
+
+
+def test_customer_rfm_build_jobs_within_budget(spark, sf_dir):
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    tag = "customer_rfm-build-jobs"
+    sc.setJobGroup(tag, "customer_rfm build")
+    try:
+        df = entry.queries()["customer_rfm"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n = len(sc.statusTracker().getJobIdsForGroup(tag))
+    assert 0 < n <= RFM_BUILD_JOBS, n
+    assert len(df.collect()) > 0
+    for h in df._docetl_cached_input:
+        h.unpersist()
+
+
+def test_actions_after_collect_read_the_collected_rows(spark):
+    """collect() releases the prefix-scan caches; later actions on the
+    frame, and frames derived from it before or after, still return the
+    collected rows. 20k unique keys: the range sampler does not take
+    every row, so a recompute would draw other partition boundaries."""
+    from docetl_spark.frame import SemanticFrame
+
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    src = spark.range(20000).selectExpr("id", "(id * 7919) % 20000 AS v")
+    b = SemanticFrame.from_df(src.repartition(4)).quantile_buckets("v", 4)
+    early = b.where("bucket = 1")  # derived before the collect
+    rows = b.collect()
+    want = sorted((r["id"], r["bucket"]) for r in rows)
+    assert [n for _, n in want].count(1) == 5000
+    # ``early`` still plans over the scan, so its cache stays pinned
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - before
+    pdf = b.to_pandas()
+    assert sorted(zip(pdf["id"].tolist(), pdf["bucket"].tolist())) == want
+    late = b.where("bucket = 1")
+    assert sorted(r["id"] for r in late.collect()) == \
+        [i for i, n in want if n == 1]
+    assert sorted(r["id"] for r in early.collect()) == \
+        [i for i, n in want if n == 1]
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - before == set()

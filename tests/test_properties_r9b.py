@@ -176,8 +176,7 @@ def test_global_quantiles_survive_heavy_ties(spark, vals):
     # middle, and every rank 1..n must be assigned exactly once
     from pyspark.sql import functions as F
 
-    from docetl_spark.functions.stats import exact_quantiles
-    from docetl_spark.operators.rank import _global_row_number
+    from docetl_spark.functions.stats import exact_quantiles, prefix_scan
 
     df = spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(vals)], "id long, v double")
@@ -190,7 +189,7 @@ def test_global_quantiles_survive_heavy_ties(spark, vals):
     i = 0.5 * (len(s) - 1)
     f, c = math.floor(i), math.ceil(i)
     assert got == s[f] + (s[c] - s[f]) * (i - f)
-    ranked = _global_row_number(df, [F.col("v").asc()], "r").collect()
+    ranked = prefix_scan(df, [F.col("v").asc()], rank_col="r")[0].collect()
     assert sorted(r["r"] for r in ranked) == list(range(1, len(vals) + 1))
     # ranks respect the value order even across tie groups
     by_rank = {r["r"]: r["v"] for r in ranked}
